@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * R3 filter → R4 route → R7 counter → R5 sink).
   *
   * Physical profile: a single narrow WholeStageCodegen stage — scan →
-  * `from_json` projection → blocklist filter → literal routing chain →
-  * null-drop → projection. No shuffle, no sort, no state. At 100 TB this
-  * pipeline is embarrassingly parallel: throughput scales linearly with
-  * input partitions (Kafka partitions / parquet splits), which is exactly
-  * how the single-node reference would be scaled out.
+  * `from_json` projection → blocklist filter → literal-map first-match
+  * route → null-drop → projection. No shuffle, no sort, no state. At
+  * 100 TB this pipeline is embarrassingly parallel: throughput scales
+  * linearly with input partitions (Kafka partitions / parquet splits),
+  * which is exactly how the single-node reference would be scaled out.
   *
   * The label-counter analogues (R6/R7) are `groupBy().count()` side
   * aggregations — the only shuffles — kept OUT of the forwarding hot path
@@ -30,7 +30,7 @@ object Pipeline {
     * .filter(target.isNotNull)`; physically crucial: Catalyst pushes each
     * Filter through the parse projection by INLINING the aliased
     * expressions into the predicate, so the filter formulation re-runs the
-    * envelope decode (and the whole routing CASE chain) once per predicate
+    * envelope decode (and the routing fold) once per predicate
     * occurrence — ten decode sites in the optimized plan, measured 3×
     * slower on the forwarding hot path. A generator's condition is
     * evaluated once per row, emits 0 or 1 rows in place, and leaves no
@@ -39,14 +39,15 @@ object Pipeline {
     * RuntimeReplaceable into an interpreted higher-order filter, which
     * drops the projection out of codegen — measured right back at 3×.)
     *
-    * The routing expression is computed ONCE, in its own projection the
+    * The routing expression ([[Routing.targetExpr]]: candidate lookup +
+    * native `first_match`) is computed ONCE, in its own projection the
     * generator consumes as a plain attribute. The naive
     * `when(cond && target.isNotNull, array(target))` duplicates the
-    * whole regex CASE chain inside the generator (condition + value),
-    * and GenerateExec codegen has no subexpression elimination — plan
-    * inspection showed every RLIKE twice, i.e. forwarded rows paid the
-    * fold 2×. The delete check folds INTO the projected target
-    * (`WHEN op <> 'd' THEN <chain>`), so deletes short-circuit to NULL
+    * fold inside the generator (condition + value), and GenerateExec
+    * codegen has no subexpression elimination — plan inspection showed
+    * every regex site twice, i.e. forwarded rows paid the fold 2×. The
+    * delete check folds INTO the projected target (`WHEN op <> 'd'
+    * THEN first_match(...)`), so deletes short-circuit to NULL
     * without touching a regex and the generator's only predicate is one
     * null probe. CollapseProject leaves the alias alone (multi-referenced,
     * non-cheap), and Project + Generate fuse into the same

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Ordered first-match routing (reference R4 + R8,
@@ -12,19 +12,19 @@ import org.apache.spark.sql.functions._
   * `Iterator::find`, i.e. FIRST match wins — and a record matching no rule
   * is silently dropped (`kafka.rs:70` has no else branch).
   *
-  * Spark-native form: an ordered `when(...)` chain. For the typical
-  * hand-written rule list (a handful to a few hundred rules) this is the
-  * right physical plan at any data scale — the rules become *literals inside
-  * whole-stage codegen*, so there is no join, no shuffle, no broadcast, and
-  * Catalyst's `RLike` compiles each literal pattern once per task exactly
-  * like the reference pre-compiles regexes at config load
-  * (`transform.rs:26-38`). Conjunct order (cheap equalities before the
-  * regex) is preserved: codegen's `And` short-circuits, so the regex only
-  * runs on candidate rules, mirroring `transform.rs:60-62`.
-  *
-  * [[targetViaJoin]] is the escape hatch for *very* large or dynamic rule
-  * sets (broadcast equi-join against per-(topic, db) candidate arrays),
-  * where a 10k-deep `when` chain would blow past JIT method limits.
+  * Spark-native form: the rule list is grouped ONCE on the driver into a
+  * `map<topic, map<db, array<struct<rule_idx, regex, target>>>>` literal,
+  * each group kept in declaration order. A row looks up its candidates
+  * with two map accesses (null on a miss, also under ANSI mode), and the
+  * native [[graft.functions.FirstMatch]] kernel folds them inside
+  * whole-stage codegen against a per-executor cache of compiled patterns
+  * — the reference's compile-at-config-load discipline
+  * (`transform.rs:26-38`). Equalities are resolved before any regex
+  * runs, so a row pays only the regexes of its own (topic, db) group,
+  * mirroring `transform.rs:60-62`. The expression tree is the same size
+  * for 0 rules and for 10,000, so there is no rule count at which
+  * analysis or codegen stops working, and the one formulation serves the
+  * batch and the streaming route alike.
   */
 object Routing {
 
@@ -49,96 +49,27 @@ object Routing {
     TransformRule("flink-2", "db_1", "table_(1|3|5|7|9)",           "t2-odd"),
     TransformRule("flink-2", "db_2", "gsms_msg_ticket_sms_[0-9]+",  "t-gsms")))
 
-  /** Ordered first-match target-topic expression; null when no rule matches. */
+  /** Ordered first-match target-topic expression; null when no rule
+    * matches. Validates the rules first, so a rule built in code with an
+    * invalid regex fails here on the driver, naming the pattern.
+    */
   def targetExpr(rules: Seq[TransformRule],
-                 topic: Column, db: Column, table: Column): Column =
-    rules.foldRight(lit(null).cast("string")) { (r, noMatch) =>
-      when(topic === lit(r.sourceTopic) && db === lit(r.db) &&
-             table.rlike(r.tableRegex),
-           lit(r.targetTopic)).otherwise(noMatch)
-    }
-
-  /** Ordered first-match over an index-sorted candidate array in ONE
-    * native expression call: the per-row fold for [[targetViaJoin]].
-    * Catalyst's `RLike` only caches the compiled `Pattern` when the
-    * pattern side is foldable (a literal); here the patterns arrive as
-    * *data*, so [[graft.functions.FirstMatch]] folds over the unsafe
-    * candidate array inside whole-stage codegen with a per-executor
-    * compiled-pattern cache — exactly the reference's
-    * compile-at-config-load discipline (`transform.rs:26-38`). This
-    * replaced the round-5 Scala-UDF formulation (the then-documented
-    * exception to the no-UDF rule): same semantics, no per-row `Seq[Row]`
-    * materialization, no codegen split.
-    */
-  private def firstMatchCached(tbl: Column, cands: Column): Column =
-    graft.functions.FirstMatch(tbl, cands)
-
-  /** Join formulation for huge/dynamic (rules-as-data) rule sets: the
-    * rules collapse to ONE candidate array per (topic, db) — tiny, even
-    * for 10k rules — which a broadcast EQUI-join attaches to each
-    * record; the ordered first-match is then a per-row `filter` fold
-    * over that array. Same semantics as [[targetExpr]] (lowest-index
-    * match wins, non-matches silently dropped).
-    *
-    * Scale notes (r5 rework of the r1 `min_by` design): the previous
-    * formulation theta-joined row×rules (multiplying multi-match
-    * records) and resolved first-match with a `groupBy(record id)`
-    * `min_by` — a full-stream shuffle CARRYING THE PAYLOAD BYTES, plus
-    * a `monotonically_increasing_id` stability precondition on the
-    * scan. Pre-aggregating the rule side instead means: no row
-    * multiplication (the equi-join is 1:≤1), no shuffle anywhere in
-    * the route (the plan stays scan → broadcast-join → project), and
-    * no record-identity requirement at all — task retries are safe on
-    * any input layout. The candidate array is ordered by rule index
-    * (struct sort on the leading field), so `filter(...)[0]` IS the
-    * reference's ordered first-match; regexes evaluate against the
-    * per-executor compiled-pattern cache (one compile per pattern) and
-    * only against the handful of candidates sharing the record's
-    * (topic, db) — typically 1-3, vs. ALL rules for the `when`-chain
-    * default. The fold happens in ONE native-expression call per record
-    * ([[graft.functions.FirstMatch]], codegen-resident — a higher-order
-    * `filter` would pay the interpreted-HOF machinery per candidate);
-    * [[targetExpr]] remains the default for small rule sets because
-    * its `when` chain stays inside whole-stage codegen.
-    */
-  def targetViaJoin(spark: SparkSession, parsed: DataFrame,
-                    rules: Seq[TransformRule]): DataFrame = {
-    import spark.implicits._
-    val ruleDf = rules.zipWithIndex
-      .map { case (r, i) => (i, r.sourceTopic, r.db, r.tableRegex, r.targetTopic) }
-      .toDF("rule_idx", "r_topic", "r_db", "r_regex", "r_target")
-    // struct sort orders by the leading field: candidate arrays come
-    // out in rule-index order, making element 0 of the filtered array
-    // the FIRST match by declaration order.
-    val ruleAgg = ruleDf.groupBy("r_topic", "r_db")
-      .agg(array_sort(collect_list(
-        struct(col("rule_idx"), col("r_regex"), col("r_target")))).as("cands"))
-    val dataCols = parsed.columns.toSeq
-    val joined = parsed.join(broadcast(ruleAgg),
-      parsed("topic") === ruleAgg("r_topic") && parsed("db") === ruleAgg("r_db"),
-      "inner")
-    // 0-or-1 explode rather than filter-on-derived-column: a Filter here
-    // would be pushed into the join output and re-run the first-match
-    // fold once per occurrence (see Pipeline.forward for the measured
-    // cost of that shape on the when-chain path). As in forward, the
-    // fold is projected ONCE and the generator consumes the attribute —
-    // GenerateExec has no subexpression elimination, so putting the
-    // first_match call in both the condition and the value would run it
-    // twice per row.
-    val target = firstMatchCached(col("tbl"), col("cands"))
-    joined
-      .select(dataCols.map(col) :+ target.as("_route_target"): _*)
-      .select(dataCols.map(col) :+
-        explode(when(col("_route_target").isNotNull,
-          array(col("_route_target")))
-          .otherwise(array().cast("array<string>"))).as("target_topic"): _*)
-      .select((dataCols :+ "target_topic").map(col): _*)
+                 topic: Column, db: Column, table: Column): Column = {
+    val groups: Map[String, Map[String, Seq[(Int, String, String)]]] =
+      validate(rules).zipWithIndex
+        .groupBy(_._1.sourceTopic).map { case (t, inTopic) =>
+          t -> inTopic.groupBy(_._1.db).map { case (d, g) =>
+            d -> g.sortBy(_._2).map { case (r, i) => (i, r.tableRegex, r.targetTopic) }
+          }
+        }
+    val candidates = typedLit(groups).getItem(topic).getItem(db)
+    graft.functions.FirstMatch(table, candidates)
   }
 
   private def sq(s: String): String = s.replace("'", "''")
 
-  /** The [[targetExpr]] rule chain as a DuckDB CASE expression (oracle).
-    * Single quotes in rule strings are SQL-escaped (doubled).
+  /** The [[targetExpr]] first-match policy as a DuckDB CASE expression
+    * (oracle). Single quotes in rule strings are SQL-escaped (doubled).
     */
   def duckdbCase(rules: Seq[TransformRule],
                  topic: String, db: String, table: String): String =

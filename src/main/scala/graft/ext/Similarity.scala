@@ -333,9 +333,10 @@ object Similarity {
     * shape without the carried source-partition column. Join + bounded
     * aggregation rather than a generated literal-array argmax
     * ([[kmeansIterated]]'s shape): at k in the hundreds the expression
-    * tree would blow past what the analyzer/codegen handle (the
-    * RouteScaleBench ≥300-rule cliff), while the join form scales as
-    * k·n scored rows with partial max_by aggregation.
+    * tree would blow past what the analyzer/codegen handle (a nested
+    * CASE chain of ≥300 branches overflows the analyzer's stack), while
+    * the join form scales as k·n scored rows with partial max_by
+    * aggregation.
     */
   private def nearestOf(vecs: DataFrame, centVecs: DataFrame): DataFrame = {
     // r17: the broadcast-join × k expansion and its max_by hash

@@ -12,20 +12,20 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Ordered first-match regex routing over a candidate array:
   * `first_match(table, candidates) → target_topic | NULL`, where
   * `candidates` is the per-(topic, db) array of `(rule_idx, regex,
-  * target)` structs the broadcast join attaches
-  * ([[graft.cdc.Routing.targetViaJoin]], reference semantics
-  * `transform.rs:52-65` — lowest-index match wins, no match → NULL).
+  * target)` structs [[graft.cdc.Routing.targetExpr]] looks up in its
+  * rule-map literal (reference semantics `transform.rs:52-65` — the
+  * first candidate that matches wins, no match → NULL).
   *
   * This replaces the last hot-path Scala UDF (the round-5 "documented
   * exception to the no-UDF rule"): a UDF pays per-row serialization to
   * JVM objects (`Seq[Row]`) and splits whole-stage codegen at the
   * projection. As a native expression the fold runs on the unsafe array
-  * directly — no row materialization — and `doGenCode` keeps the join
-  * output stage in one codegen span. Rules-as-DATA regexes still can't
-  * be compile-time literals (that is the point of the join formulation),
-  * so compiled patterns come from the same bounded per-executor cache
-  * the UDF used: one compile per distinct pattern per executor, exactly
-  * the reference's compile-at-config-load discipline.
+  * directly — no row materialization — and `doGenCode` keeps the route
+  * in one codegen span. The candidate regexes are array ELEMENTS, not
+  * foldable pattern literals, so Catalyst's `RLike` pattern caching does
+  * not apply; compiled patterns come from a bounded per-executor cache
+  * instead: one compile per distinct pattern per executor, exactly the
+  * reference's compile-at-config-load discipline.
   */
 case class FirstMatch(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -48,7 +48,7 @@ class RoutingSpec extends SparkSpec {
     assert(m("gsms_msg_ticket_mms_1") == null)
   }
 
-  test("targetViaJoin matches targetExpr, including duplicate Kafka keys") {
+  test("routeParsed keeps every record, including duplicate Kafka keys") {
     // Two DISTINCT records share key k1 (routine in CDC): both must
     // survive — the round-1 window-over-key formulation collapsed them.
     val parsed = Seq(
@@ -57,20 +57,21 @@ class RoutingSpec extends SparkSpec {
       ("t1", "k2", "v3", "u", "db", "none"),
       ("t2", "k3", "v4", "u", "db", "gsms_msg_ticket_sms_5"))
       .toDF("topic", "key", "value", "op", "db", "tbl")
-    val viaJoin = Routing.targetViaJoin(spark, parsed, rules)
-      .select("key", "value", "target_topic").as[(String, String, String)].collect().toSet
-    val viaExpr = parsed
-      .withColumn("target_topic", Routing.targetExpr(rules, col("topic"), col("db"), col("tbl")))
-      .filter(col("target_topic").isNotNull)
-      .select("key", "value", "target_topic").as[(String, String, String)].collect().toSet
-    assert(viaJoin == viaExpr)
-    assert(viaJoin.map(_._2) == Set("v1", "v2", "v4"))
+    val routed = Pipeline.routeParsed(parsed, rules)
+      .select("key", "value", "target_topic").as[(String, String, String)].collect()
+    assert(routed.toSet == Set(
+      ("k1", "v1", "low"), ("k1", "v2", "rest"), ("k3", "v4", "gsms")))
+    assert(routed.length == 3)
   }
 
   test("validate fails fast on an invalid regex, like transform.rs:33") {
-    intercept[Exception] {
-      Routing.validate(Seq(TransformRule("t", "d", "ta[ble", "x")))
-    }
+    val bad = Seq(TransformRule("t", "d", "ta[ble", "x"))
+    intercept[java.util.regex.PatternSyntaxException](Routing.validate(bad))
+    // A rule built in code (no config load) fails on the driver while the
+    // plan is built, not per row on an executor, and names its pattern.
+    val raw = Seq(("t", "k", "{}")).toDF("topic", "key", "value")
+    val e = intercept[java.util.regex.PatternSyntaxException](Pipeline.route(raw, bad))
+    assert(e.getMessage.contains("ta[ble"))
   }
 
   test("duckdbCase escapes embedded single quotes") {

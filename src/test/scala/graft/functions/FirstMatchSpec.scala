@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The native first-match fold: ordered semantics, null paths, codegen
-  * survival, and SQL registration. cdc_route_join's oracle row pins the
-  * end-to-end equivalence with the when-chain formulation; these cases
+  * survival, and SQL registration. Every cdc_route* oracle row pins it
+  * end to end (it is the fold inside `Routing.targetExpr`); these cases
   * pin the expression in isolation.
   */
 class FirstMatchSpec extends SparkSpec {
